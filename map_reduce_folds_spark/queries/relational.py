@@ -559,15 +559,13 @@ def sessionize_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         sessionize_stateful, staged_parquet_rows)
 
     schema = "user_id bigint, ts timestamp"
-    # stage ONE source directory: a symlink to the fixture events file
-    # plus a sentinel row — the streaming file source requires a
-    # directory, and a single source guarantees the first microbatch
-    # swallows both files (a sentinel-first batch would make every real
-    # event late against the advanced watermark).  Per-run mkdtemp (r11
-    # advice): the old name keyed on Python's per-process randomized
-    # hash(), so runs leaked unreclaimed /tmp dirs and two same-named
-    # concurrent runs would race on unlink-then-symlink; mkdtemp is
-    # collision-free by construction and removed in the finally.
+    # stage ONE source directory: symlinks to the fixture's events part
+    # file(s) (events.parquet may be one file or a Spark-written
+    # directory) plus a sentinel row.  The streaming file source requires
+    # a directory, and a single source guarantees the first microbatch
+    # swallows every file (a sentinel-first batch would make every real
+    # event late against the advanced watermark).  A per-run mkdtemp is
+    # collision-free across concurrent runs and removed in the finally.
     import shutil
 
     src = tempfile.mkdtemp(prefix="mrf_sess_stream_")
@@ -587,8 +585,9 @@ def sessionize_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "ts": pa.array([dt.datetime(2100, 1, 1)],
                                      pa.timestamp("us"))}),
             os.path.join(src, "sentinel_0.parquet"))
-        events_path = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-        os.symlink(events_path, os.path.join(src, "events.parquet"))
+        _link_parquet_parts(
+            os.path.abspath(os.path.join(sf_dir, "events.parquet")),
+            src, "events")
         stream = read_parquet_stream(
             spark, src, schema, max_files_per_trigger=1000
         ).withWatermark("ts", "0 seconds")
@@ -605,26 +604,46 @@ def sessionize_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "session_start_us", "session_end_us", "n_events")
 
 
-def _cusum_stream_stateful_impl(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """The SECOND stateful-streaming path under the driver gate (r11
-    verdict Next #5): events replayed as a TWO-BATCH file stream through
-    ``streaming.stream_cusum`` (GroupState, applyInPandasWithState) must
-    equal the batch ``windows.cusum_per_key`` oracle exactly — integer
-    state, alarms included, with state genuinely CARRIED across the
-    micro-batch boundary.
+def _link_parquet_parts(path: str, dst: str, prefix: str,
+                       mtime: float | None = None) -> None:
+    """Symlink the parquet part files of ``path`` — one file, or a
+    Spark-written directory of parts — into ``dst`` as
+    ``{prefix}_{n}.parquet`` in name order, optionally pinning each
+    target's mtime (the file source replays in mtime order).  Linking
+    parts, never a directory, keeps the staged directory flat, which the
+    footer probe ``streaming.staged_parquet_rows`` needs."""
+    import os
 
-    Determinism of the replay: the fixture is split at the median
-    timestamp into two staged files (every event with ts ≤ cut in file
-    A, the rest in file B), so each user's events arrive in
-    nondecreasing event-time order across batches — equal-timestamp
-    pairs land in the SAME file, where the operator's in-batch
-    (ts, tiebreak) sort orders them — making the arrival-order fold
-    bitwise-equal to the batch closed form.  File order is pinned twice
-    (mtime AND lexicographic name) and ``max_files_per_trigger=1``
-    forces one file per micro-batch.  The final per-user state is the
-    row with the largest n_events (monotone per key under update
-    mode)."""
+    parts = [path] if os.path.isfile(path) else [
+        os.path.join(path, f) for f in sorted(os.listdir(path))
+        if f.endswith(".parquet") and not f.startswith((".", "_"))]
+    for n, tgt in enumerate(parts):
+        if mtime is not None:
+            os.utime(tgt, (mtime, mtime))
+        os.symlink(tgt, os.path.join(dst, f"{prefix}_{n}.parquet"))
+
+
+_EVENTS_REPLAY_SCHEMA = \
+    "user_id bigint, ts timestamp, value double, event_id bigint"
+
+
+def _replay_two_batches(spark: SparkSession, ev: DataFrame, schema: str,
+                        stream_op, name: str) -> DataFrame:
+    """Replay ``ev``'s ``schema`` columns as a TWO-BATCH file stream
+    through ``stream_op`` and drain it into the in-memory table ``name``
+    — the staging shared by the stateful-stream gate rows.
+
+    Determinism of the replay: ``ev`` is split at the median ``ts`` into
+    two staged files (every event with ts ≤ cut in file A, the rest in
+    file B; ``schema``'s columns, one ``coalesce(1)`` file each), so each
+    key's events arrive in nondecreasing event-time order across batches
+    — equal-timestamp pairs land in the SAME file, where an ordered
+    twin's in-batch (ts, tiebreak) sort orders them.  File order is
+    pinned twice (mtime AND lexicographic name) and
+    ``max_files_per_trigger=1`` forces one file per micro-batch.  The
+    state shuffle is sized from the staged parquet footers.  Both
+    staging directories are removed on every exit; the memory table
+    does not read them."""
     import os
     import shutil
     import tempfile
@@ -632,50 +651,55 @@ def _cusum_stream_stateful_impl(spark: SparkSession,
 
     from map_reduce_folds_spark.streaming import (
         adaptive_state_partitions, read_parquet_stream, run_to_memory,
-        staged_parquet_rows, stream_cusum)
+        staged_parquet_rows)
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "value", "event_id")
+    cols = [f.split()[0] for f in schema.split(",")]
     cut = ev.agg(F.percentile_approx("ts", 0.5).alias("c")).first()["c"]
-    src = tempfile.mkdtemp(prefix="mrf_cusum_stream_")
-    stage = tempfile.mkdtemp(prefix="mrf_cusum_stage_")
+    src = tempfile.mkdtemp(prefix=f"mrf_{name}_src_")
+    stage = tempfile.mkdtemp(prefix=f"mrf_{name}_stage_")
     try:
-        ev.where(F.col("ts") <= F.lit(cut)).coalesce(1).write.mode(
-            "overwrite").parquet(os.path.join(stage, "a"))
-        ev.where(F.col("ts") > F.lit(cut)).coalesce(1).write.mode(
-            "overwrite").parquet(os.path.join(stage, "b"))
         t0 = time.time()
-        for i, half in enumerate(("a", "b")):
-            n = 0
+        for i, (half, cond) in enumerate(
+                (("a", F.col("ts") <= F.lit(cut)),
+                 ("b", F.col("ts") > F.lit(cut)))):
             d = os.path.join(stage, half)
-            for f in sorted(os.listdir(d)):
-                if f.endswith(".parquet"):
-                    tgt = os.path.join(d, f)
-                    os.utime(tgt, (t0 + 100 * i, t0 + 100 * i))
-                    os.symlink(tgt,
-                               os.path.join(src, f"{half}_{n}.parquet"))
-                    n += 1
-        stream = read_parquet_stream(
-            spark, src,
-            "user_id bigint, ts timestamp, value double, event_id bigint",
-            max_files_per_trigger=1)
-        out = stream_cusum(stream, "user_id", "ts", "value",
-                           _CUSUM_K, _CUSUM_H, tiebreak_col="event_id",
-                           output_mode="update")
-        got = run_to_memory(out, "cusum_stream_stateful_q",
-                            timeout_s=300, output_mode="update",
-                            state_partitions=adaptive_state_partitions(
-                                spark, staged_parquet_rows(src)))
-        # materialize before the staging dirs disappear
-        final = got.groupBy("user_id").agg(
-            F.max_by(F.struct("n_events", "final_cusum", "max_cusum",
-                              "n_alarms"), "n_events").alias("s")
-        ).select("user_id", "s.*")
-        final = final.localCheckpoint(eager=True)
+            ev.where(cond).select(*cols).coalesce(1) \
+                .write.mode("overwrite").parquet(d)
+            _link_parquet_parts(d, src, half, mtime=t0 + 100 * i)
+        stream = read_parquet_stream(spark, src, schema,
+                                     max_files_per_trigger=1)
+        return run_to_memory(
+            stream_op(stream), name, timeout_s=300, output_mode="update",
+            state_partitions=adaptive_state_partitions(
+                spark, staged_parquet_rows(src)))
     finally:
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(stage, ignore_errors=True)
-    return final
+
+
+def _cusum_stream_stateful_impl(spark: SparkSession,
+                                sf_dir: str) -> DataFrame:
+    """The SECOND stateful-streaming path under the driver gate (r11
+    verdict Next #5): events replayed as a TWO-BATCH file stream
+    (:func:`_replay_two_batches`, which carries the determinism
+    argument) through ``streaming.stream_cusum`` (GroupState) must
+    equal the batch ``windows.cusum_per_key`` oracle exactly — integer
+    state, alarms included, with state genuinely CARRIED across the
+    micro-batch boundary.  The final per-user state is the row with the
+    largest n_events (monotone per key under update mode)."""
+    from map_reduce_folds_spark.streaming import stream_cusum
+
+    got = _replay_two_batches(
+        spark, load_table(spark, sf_dir, "events"), _EVENTS_REPLAY_SCHEMA,
+        lambda stream: stream_cusum(
+            stream, "user_id", "ts", "value", _CUSUM_K, _CUSUM_H,
+            tiebreak_col="event_id", output_mode="update"),
+        "cusum_stream_stateful_q")
+    final = got.groupBy("user_id").agg(
+        F.max_by(F.struct("n_events", "final_cusum", "max_cusum",
+                          "n_alarms"), "n_events").alias("s")
+    ).select("user_id", "s.*")
+    return final.localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -4421,67 +4445,26 @@ _HOLT_A, _HOLT_B, _HOLT_H = 2, 2, 3
 def _holt_stream_stateful_impl(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     """THIRD stateful-streaming path under the driver gate: events
-    replayed as a TWO-BATCH file stream through
-    ``streaming.stream_holt`` (GroupState, applyInPandasWithState) must
-    equal the batch ``windows.holt_last`` oracle bitwise — (level,
-    trend) doubles included, state genuinely CARRIED across the
-    micro-batch boundary.  Same median-timestamp split / pinned file
-    order / one-file-per-trigger determinism argument as
-    ``_cusum_stream_stateful_impl`` (equal-ts pairs land in one file
-    where the in-batch (ts, tiebreak) sort orders them); the final
-    per-user state is the row with the largest n_events (monotone per
-    key under update mode)."""
-    import os
-    import shutil
-    import tempfile
-    import time
+    replayed as a TWO-BATCH file stream (:func:`_replay_two_batches`)
+    through ``streaming.stream_holt`` (GroupState) must equal the batch
+    ``windows.holt_last`` oracle bitwise — (level, trend) doubles
+    included, state genuinely CARRIED across the micro-batch boundary.
+    The final per-user state is the row with the largest n_events
+    (monotone per key under update mode)."""
+    from map_reduce_folds_spark.streaming import stream_holt
 
-    from map_reduce_folds_spark.streaming import (
-        adaptive_state_partitions, read_parquet_stream, run_to_memory,
-        staged_parquet_rows, stream_holt)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "value", "event_id")
-    cut = ev.agg(F.percentile_approx("ts", 0.5).alias("c")).first()["c"]
-    src = tempfile.mkdtemp(prefix="mrf_holt_stream_")
-    stage = tempfile.mkdtemp(prefix="mrf_holt_stage_")
-    try:
-        ev.where(F.col("ts") <= F.lit(cut)).coalesce(1).write.mode(
-            "overwrite").parquet(os.path.join(stage, "a"))
-        ev.where(F.col("ts") > F.lit(cut)).coalesce(1).write.mode(
-            "overwrite").parquet(os.path.join(stage, "b"))
-        t0 = time.time()
-        for i, half in enumerate(("a", "b")):
-            n = 0
-            d = os.path.join(stage, half)
-            for f in sorted(os.listdir(d)):
-                if f.endswith(".parquet"):
-                    tgt = os.path.join(d, f)
-                    os.utime(tgt, (t0 + 100 * i, t0 + 100 * i))
-                    os.symlink(tgt,
-                               os.path.join(src, f"{half}_{n}.parquet"))
-                    n += 1
-        stream = read_parquet_stream(
-            spark, src,
-            "user_id bigint, ts timestamp, value double, event_id bigint",
-            max_files_per_trigger=1)
-        out = stream_holt(stream, "user_id", "ts", "value",
-                          tiebreak_col="event_id",
-                          alpha_halves=_HOLT_A, beta_halves=_HOLT_B,
-                          horizon=_HOLT_H, output_mode="update")
-        got = run_to_memory(out, "holt_stream_stateful_q",
-                            timeout_s=300, output_mode="update",
-                            state_partitions=adaptive_state_partitions(
-                                spark, staged_parquet_rows(src)))
-        final = got.groupBy("user_id").agg(
-            F.max_by(F.struct("n_events", "level", "trend", "forecast"),
-                     "n_events").alias("s")
-        ).select("user_id", "s.*")
-        final = final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-    return final
+    got = _replay_two_batches(
+        spark, load_table(spark, sf_dir, "events"), _EVENTS_REPLAY_SCHEMA,
+        lambda stream: stream_holt(
+            stream, "user_id", "ts", "value", tiebreak_col="event_id",
+            alpha_halves=_HOLT_A, beta_halves=_HOLT_B, horizon=_HOLT_H,
+            output_mode="update"),
+        "holt_stream_stateful_q")
+    final = got.groupBy("user_id").agg(
+        F.max_by(F.struct("n_events", "level", "trend", "forecast"),
+                 "n_events").alias("s")
+    ).select("user_id", "s.*")
+    return final.localCheckpoint(eager=True)
 
 
 def _holt_stream_oracle() -> str:
@@ -4500,51 +4483,25 @@ from map_reduce_folds_spark.operators import evalstats as ES  # noqa: E402
 def _confseq_stream_stateful_impl(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """FOURTH stateful-streaming path under the driver gate: per-cohort
-    purchase counts replayed as a TWO-BATCH file stream through
-    ``streaming.stream_confseq`` (GroupState, applyInPandasWithState)
-    must equal the batch whole-history counts + confseq_bounds chain
-    bitwise.  Simpler determinism argument than the CUSUM/Holt rows:
-    the state is two COMMUTATIVE integer sums, so no (ts, tiebreak)
-    ordering is needed at all — any split/arrival order yields the
-    same final state; the band columns are the SAME Spark expression
-    on both sides.  Final per-cohort state = the max-n_cum emission
-    (monotone per key under update mode)."""
-    import os
-    import tempfile
-    import time
-
-    from map_reduce_folds_spark.streaming import (
-        adaptive_state_partitions, read_parquet_stream, run_to_memory,
-        staged_parquet_rows, stream_confseq)
+    purchase counts replayed as a TWO-BATCH file stream
+    (:func:`_replay_two_batches`) through ``streaming.stream_confseq``
+    (GroupState) must equal the batch whole-history counts +
+    confseq_bounds chain bitwise.  Simpler determinism argument than
+    the CUSUM/Holt rows: the state is two COMMUTATIVE integer sums, so
+    no (ts, tiebreak) ordering is needed at all — any split/arrival
+    order yields the same final state; the band columns are the SAME
+    Spark expression on both sides.  Final per-cohort state = the
+    max-n_cum emission (monotone per key under update mode)."""
+    from map_reduce_folds_spark.streaming import stream_confseq
 
     ev = load_table(spark, sf_dir, "events").select(
         (F.col("user_id") % 8).cast("bigint").alias("bucket"),
         (F.col("event_type") == "purchase").cast("bigint").alias("succ"),
         "ts")
-    cut = ev.agg(F.percentile_approx("ts", 0.5).alias("c")).first()["c"]
-    src = tempfile.mkdtemp(prefix="mrf_confseq_stream_")
-    stage = tempfile.mkdtemp(prefix="mrf_confseq_stage_")
-    t0 = time.time()
-    for i, (half, cond) in enumerate(
-            (("a", F.col("ts") <= F.lit(cut)),
-             ("b", F.col("ts") > F.lit(cut)))):
-        d = os.path.join(stage, half)
-        ev.where(cond).select("bucket", "succ").coalesce(1) \
-            .write.mode("overwrite").parquet(d)
-        n = 0
-        for f in sorted(os.listdir(d)):
-            if f.endswith(".parquet"):
-                tgt = os.path.join(d, f)
-                os.utime(tgt, (t0 + 100 * i, t0 + 100 * i))
-                os.symlink(tgt, os.path.join(src, f"{half}_{n}.parquet"))
-                n += 1
-    stream = read_parquet_stream(
-        spark, src, "bucket bigint, succ bigint", max_files_per_trigger=1)
-    out = stream_confseq(stream, "bucket", "succ")
-    got = run_to_memory(out, "confseq_stream_stateful_q",
-                        timeout_s=300, output_mode="update",
-                        state_partitions=adaptive_state_partitions(
-                            spark, staged_parquet_rows(src)))
+    got = _replay_two_batches(
+        spark, ev, "bucket bigint, succ bigint",
+        lambda stream: stream_confseq(stream, "bucket", "succ"),
+        "confseq_stream_stateful_q")
     return (got.groupBy("bucket")
             .agg(F.max_by(F.struct("n_cum", "s_cum", "rate", "radius",
                                    "lo", "hi"), "n_cum").alias("s"))

@@ -62,7 +62,7 @@ def stream_mapreduce(
     if not all(f.compilable for f in mr.reduce.folds.values()):
         raise TypeError(
             "streaming folds must compile to Spark aggregate expressions "
-            "(custom folds need applyInPandasWithState — see stateful_fold)"
+            "(custom folds need keyed GroupState — see stateful_fold)"
         )
 
     out = mr.unpack.apply(stream)
@@ -102,15 +102,21 @@ def session_windows(
     )
 
 
+# Rows per stateful-shuffle partition: a per-partition fixed cost of ~0.1 s
+# over ~0.15 ms/row of fold work is the measured local balance point; a
+# cluster serving real state volume saturates the session cap anyway.
+_STATE_ROWS_PER_PARTITION = 2500
+
+
 def adaptive_state_partitions(spark: SparkSession, input_rows: int) -> int:
     """AQE-style sizing for a stateful streaming shuffle, keyed on ROWS.
 
     Batch shuffles get their small partitions coalesced at runtime by AQE;
     a streaming stateful operator CANNOT — its partition count is pinned
     (from ``spark.sql.shuffle.partitions``) when the query first starts and
-    every micro-batch then pays a fixed per-partition cost (one
-    applyInPandasWithState Python-worker exchange + one state-store
-    open/commit per partition per batch, measured ~0.1 s each locally)
+    every micro-batch then pays a fixed per-partition cost (one GroupState
+    Python-worker exchange + one state-store open/commit per partition
+    per batch, measured ~0.1 s each locally)
     even for partitions holding a handful of keys.  So derive the count
     from the replayed input, capped at the session's shuffle parallelism.
 
@@ -119,19 +125,11 @@ def adaptive_state_partitions(spark: SparkSession, input_rows: int) -> int:
     partition count must follow row-wise work) — a byte rule sized this
     KB-scale state to ONE partition and serialized the whole per-key fold
     onto one core (measured 4.7 s vs 2.7 s at 4 partitions, sf0.01).
-    The chunk is parameterised via MRF_STREAM_STATE_ROWS_PER_PARTITION
-    (default 2500: per-partition fixed cost ~0.1 s over ~0.15 ms/row of
-    fold work is the measured local balance point; a cluster serving
-    real state volume would raise it and saturate the cap anyway).
     Scale-adaptive by construction: a 100 TB replay hits the session cap,
     a fixture replay gets the handful of partitions its work warrants.
     """
-    import os as _os
-
-    chunk = int(_os.environ.get("MRF_STREAM_STATE_ROWS_PER_PARTITION",
-                                "2500"))
     sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(1, min(sess, -(-int(input_rows) // max(1, chunk))))
+    return max(1, min(sess, -(-int(input_rows) // _STATE_ROWS_PER_PARTITION)))
 
 
 def staged_parquet_rows(src_dir: str) -> int:
@@ -157,10 +155,10 @@ def run_to_memory(stream_df: DataFrame, name: str, timeout_s: int = 60,
     test/debug sink only.
 
     ``state_partitions`` (e.g. from :func:`adaptive_state_partitions`)
-    temporarily pins ``spark.sql.shuffle.partitions`` for the query's
-    lifetime: StreamExecution clones the session conf when the query
-    starts, so the stateful operator's partition count is captured then
-    and the session value can be restored afterwards.
+    pins ``spark.sql.shuffle.partitions`` only across ``start()``:
+    StreamExecution clones the session conf while the query starts, so
+    the stateful operator's partition count is captured there and the
+    session value is restored before the query runs its batches.
     """
     spark = stream_df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -175,12 +173,88 @@ def run_to_memory(stream_df: DataFrame, name: str, timeout_s: int = 60,
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(timeout_s)
-        q.stop()
     finally:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return stream_df.sparkSession.table(name)
+    try:
+        q.awaitTermination(timeout_s)
+    finally:
+        q.stop()
+    return spark.table(name)
+
+
+def _keyed_json_fold(
+    src: DataFrame,
+    keys: list[str],
+    cols,
+    init,
+    step,
+    emit,
+    out_fields: str,
+    output_mode: str,
+    ordered: bool,
+) -> DataFrame:
+    """The one keyed, no-timeout GroupState fold behind
+    :func:`stateful_fold` and the stateful stream twins.
+
+    Per key and micro-batch: load the JSON state (``init()`` when the key
+    is new), gather the batch's ``cols`` as row tuples, sort them by the
+    WHOLE tuple when ``ordered`` (the twins put event time and tiebreak
+    first, so this is their (ts, tiebreak) event order), fold each row
+    through ``acc = step(acc, row)``, store the state and emit one row:
+    the key columns, then the ``emit(acc)`` mapping, typed by
+    ``out_fields``.  State is JSON, so it must be small and JSON-native.
+    """
+    import json
+
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    key_fields = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in src.schema.fields if f.name in keys
+    )
+
+    def update(key, pdf_iter, state: GroupState):
+        import pandas as pd  # local import: runs on executors
+
+        acc = json.loads(state.get[0]) if state.exists else init()
+        rows = []
+        for pdf in pdf_iter:
+            rows.extend(zip(*(pdf[c] for c in cols)))
+        if ordered:
+            rows.sort()
+        for row in rows:
+            acc = step(acc, row)
+        state.update((json.dumps(acc),))
+        yield pd.DataFrame([{**dict(zip(keys, key)), **emit(acc)}])
+
+    return src.groupBy(*keys).applyInPandasWithState(
+        update,
+        outputStructType=f"{key_fields}, {out_fields}",
+        stateStructType="acc string",
+        outputMode=output_mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+# the event-time twins' source columns: epoch µs, tiebreak, folded value
+_EVENT_COLS = ("__t", "__b", "__x")
+
+
+def _event_time_src(stream: DataFrame, key: str, ts_col: str,
+                    tiebreak_col: str | None, x) -> DataFrame:
+    """``(key, __t, __b, __x)`` for an event-time-ordered twin: the
+    tiebreak is 0 when absent, so the whole-tuple sort of
+    :func:`_keyed_json_fold` folds rows in (ts, tiebreak) order."""
+    from ..timeutil import epoch_us
+
+    tb = F.col(tiebreak_col) if tiebreak_col else F.lit(0)
+    return stream.select(
+        F.col(key),
+        epoch_us(F.col(ts_col)).alias("__t"),
+        tb.alias("__b"),
+        x.alias("__x"),
+    )
 
 
 def stateful_fold(
@@ -193,7 +267,7 @@ def stateful_fold(
     output_mode: str = "update",
 ) -> "StreamingFoldQuery":
     """Arbitrary custom fold as an incrementally-maintained streaming state
-    (``applyInPandasWithState``).
+    (keyed GroupState).
 
     The fold's ``(step, init, extract)`` triple — the reference's
     ``FL.Fold`` (Streamly.hs:140-141) — IS the state spec: state = acc,
@@ -205,43 +279,14 @@ def stateful_fold(
     Unlike the windowed path this never drops state (no watermark): use it
     for per-key running aggregates, not unbounded-cardinality keys.
     """
-    import json
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    key_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in stream.schema.fields if f.name in keys
-    )
-    out_schema = f"{key_fields}, {out_col} {out_dtype}"
-    state_schema = "acc string"
-
-    def update(key, pdf_iter, state: GroupState):
-        import pandas as pd  # local import: runs on executors
-
-        if state.exists:
-            (acc_json,) = state.get
-            acc = json.loads(acc_json)
-        else:
-            acc = fold.init() if callable(fold.init) else fold.init
-        for pdf in pdf_iter:
-            for row in pdf[value_cols].itertuples(index=False):
-                arg = row if len(value_cols) > 1 else row[0]
-                acc = fold.step(acc, arg)
-        state.update((json.dumps(acc),))
-        row = dict(zip(keys, key))
-        row[out_col] = fold.extract(acc)
-        yield pd.DataFrame([row])
-
-    return (
-        stream.groupBy(*keys)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode=output_mode,
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    single = len(value_cols) == 1
+    return _keyed_json_fold(
+        stream, keys, value_cols,
+        init=lambda: fold.init() if callable(fold.init) else fold.init,
+        step=lambda acc, row: fold.step(acc, row[0] if single else row),
+        emit=lambda acc: {out_col: fold.extract(acc)},
+        out_fields=f"{out_col} {out_dtype}",
+        output_mode=output_mode, ordered=False,
     )
 
 
@@ -251,7 +296,7 @@ def sessionize_stateful(
     ts_col: str,
     gap_seconds: int,
 ) -> DataFrame:
-    """Timer-based session emission on ``applyInPandasWithState`` — the
+    """Timer-based session emission on keyed GroupState — the
     same semantics as :func:`sessionize_tws` (one row per CLOSED session:
     in-batch close by the gap rule, or event-time TIMEOUT close once the
     watermark passes ``session_end + gap``) on the GroupState API, which
@@ -722,65 +767,34 @@ def stream_funnel_depth(
     ``incremental_dedup`` (exactly-once per key, first-writer-wins).
     For time-ordered replay (the property tests' shape) the result
     equals the batch operator on the union of all batches."""
-    import json
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..timeutil import epoch_us
-
     if len(set(steps)) != len(steps):
         raise ValueError(f"funnel steps must be distinct, got {steps}")
-    key_field = next(f for f in stream.schema.fields
-                     if f.name == user_col)
-    out_schema = f"{key_field.name} {key_field.dataType.simpleString()}, " \
-                 "depth int"
     horizon = None if within is None else int(within)
 
     # pre-map events to STEP INDICES (the batch twin's discipline) so the
     # in-batch sort key is (ts, tiebreak, index) — same-timestamp events
     # fold in the same order as batch funnel_depth's struct sort, never
     # by event-name lexicography
-    tb = F.col(tiebreak_col) if tiebreak_col else F.lit(0)
     idx_col = F.lit(0)
     for i_, step_ in reversed(list(enumerate(steps))):
         idx_col = F.when(F.col(event_col) == step_,
                          F.lit(i_ + 1)).otherwise(idx_col)
-    filtered = stream.where(F.col(event_col).isin(steps)).select(
-        F.col(user_col),
-        epoch_us(F.col(ts_col)).alias("__t"),
-        tb.alias("__b"),
-        idx_col.cast("int").alias("__i"),
-    )
+    src = _event_time_src(stream.where(F.col(event_col).isin(steps)),
+                          user_col, ts_col, tiebreak_col, idx_col.cast("int"))
 
-    def update(key, pdf_iter, state: GroupState):
-        import pandas as pd  # local import: runs on executors
+    def step(acc, row):
+        depth, last_t = acc
+        t, _b, i = row
+        if i == depth + 1 and (
+            horizon is None or depth == 0 or t - last_t <= horizon
+        ):
+            return depth + 1, int(t)
+        return depth, last_t
 
-        if state.exists:
-            (st_json,) = state.get
-            depth, last_t = json.loads(st_json)
-        else:
-            depth, last_t = 0, 0
-        rows = []
-        for pdf in pdf_iter:
-            rows.extend(zip(pdf["__t"], pdf["__b"], pdf["__i"]))
-        rows.sort()
-        for t, _b, i in rows:
-            if i == depth + 1 and (
-                horizon is None or depth == 0 or t - last_t <= horizon
-            ):
-                depth, last_t = depth + 1, int(t)
-        state.update((json.dumps([depth, last_t]),))
-        yield pd.DataFrame([{user_col: key[0], "depth": depth}])
-
-    return (
-        filtered.groupBy(user_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType="acc string",
-            outputMode=output_mode,
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_json_fold(
+        src, [user_col], _EVENT_COLS, init=lambda: (0, 0), step=step,
+        emit=lambda acc: {"depth": acc[0]}, out_fields="depth int",
+        output_mode=output_mode, ordered=True,
     )
 
 
@@ -802,52 +816,22 @@ def stream_ewma(
     operator (parity-tested).  Same arrival-order caveat as
     ``stream_funnel_depth``: a cross-batch late event folds into the
     state as of its arrival batch."""
-    import json
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..timeutil import epoch_us
-
     if alpha_halves < 1:
         raise ValueError(f"alpha_halves must be >= 1, got {alpha_halves}")
     alpha = 1.0 / (1 << alpha_halves)
-    fields = {f.name: f.dataType.simpleString() for f in stream.schema.fields}
-    out_schema = f"{key} {fields[key]}, n_events bigint, ewma double"
-    tb = F.col(tiebreak_col) if tiebreak_col else F.lit(0)
-    src = stream.select(
-        F.col(key),
-        epoch_us(F.col(ts_col)).alias("__t"),
-        tb.alias("__b"),
-        F.col(value_col).cast("double").alias("__x"),
-    )
+    src = _event_time_src(stream, key, ts_col, tiebreak_col,
+                          F.col(value_col).cast("double"))
 
-    def update(key_, pdf_iter, state: GroupState):
-        import pandas as pd  # local import: runs on executors
+    def step(acc, row):
+        n, e = acc
+        x = float(row[2])
+        return n + 1, x if n == 0 else alpha * x + (1 - alpha) * e
 
-        if state.exists:
-            (st_json,) = state.get
-            n, e = json.loads(st_json)
-        else:
-            n, e = 0, 0.0
-        rows = []
-        for pdf in pdf_iter:
-            rows.extend(zip(pdf["__t"], pdf["__b"], pdf["__x"]))
-        rows.sort()
-        for _t, _b, x in rows:
-            e = float(x) if n == 0 else alpha * float(x) + (1 - alpha) * e
-            n += 1
-        state.update((json.dumps([n, e]),))
-        yield pd.DataFrame([{key: key_[0], "n_events": n, "ewma": e}])
-
-    return (
-        src.groupBy(key)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType="acc string",
-            outputMode=output_mode,
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_json_fold(
+        src, [key], _EVENT_COLS, init=lambda: (0, 0.0), step=step,
+        emit=lambda acc: {"n_events": acc[0], "ewma": acc[1]},
+        out_fields="n_events bigint, ewma double",
+        output_mode=output_mode, ordered=True,
     )
 
 
@@ -873,12 +857,6 @@ def stream_holt(
     live anomaly/forecast feed a monitoring pipeline consumes.  Same
     arrival-order caveat as ``stream_ewma``: a cross-batch late event
     folds into the state as of its arrival batch."""
-    import json
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..timeutil import epoch_us
-
     if alpha_halves < 1 or beta_halves < 1:
         raise ValueError(
             f"alpha_halves/beta_halves must be >= 1, got "
@@ -886,52 +864,30 @@ def stream_holt(
     alpha = 1.0 / (1 << alpha_halves)
     beta = 1.0 / (1 << beta_halves)
     h = float(horizon)
-    fields = {f.name: f.dataType.simpleString() for f in stream.schema.fields}
-    out_schema = (f"{key} {fields[key]}, n_events bigint, level double, "
-                  "trend double, forecast double")
-    tb = F.col(tiebreak_col) if tiebreak_col else F.lit(0)
-    src = stream.select(
-        F.col(key),
-        epoch_us(F.col(ts_col)).alias("__t"),
-        tb.alias("__b"),
-        F.col(value_col).cast("double").alias("__x"),
-    )
+    src = _event_time_src(stream, key, ts_col, tiebreak_col,
+                          F.col(value_col).cast("double"))
 
-    def update(key_, pdf_iter, state: GroupState):
-        import pandas as pd  # local import: runs on executors
+    def step(acc, row):
+        n, lv, tr = acc
+        x = float(row[2])
+        if n == 0:
+            return 1, x, 0.0
+        nl = alpha * x + (1 - alpha) * (lv + tr)
+        ntr = (beta * (alpha * (x - lv) + (1 - alpha) * tr)
+               + (1 - beta) * tr)
+        return n + 1, nl, ntr
 
-        if state.exists:
-            (st_json,) = state.get
-            n, lv, tr = json.loads(st_json)
-        else:
-            n, lv, tr = 0, 0.0, 0.0
-        rows = []
-        for pdf in pdf_iter:
-            rows.extend(zip(pdf["__t"], pdf["__b"], pdf["__x"]))
-        rows.sort()
-        for _t, _b, x in rows:
-            x = float(x)
-            if n == 0:
-                lv, tr = x, 0.0
-            else:
-                nl = alpha * x + (1 - alpha) * (lv + tr)
-                ntr = (beta * (alpha * (x - lv) + (1 - alpha) * tr)
-                       + (1 - beta) * tr)
-                lv, tr = nl, ntr
-            n += 1
-        state.update((json.dumps([n, lv, tr]),))
-        yield pd.DataFrame([{key: key_[0], "n_events": n, "level": lv,
-                             "trend": tr, "forecast": lv + h * tr}])
+    def emit(acc):
+        n, lv, tr = acc
+        return {"n_events": n, "level": lv, "trend": tr,
+                "forecast": lv + h * tr}
 
-    return (
-        src.groupBy(key)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType="acc string",
-            outputMode=output_mode,
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_json_fold(
+        src, [key], _EVENT_COLS, init=lambda: (0, 0.0, 0.0), step=step,
+        emit=emit,
+        out_fields="n_events bigint, level double, trend double, "
+                   "forecast double",
+        output_mode=output_mode, ordered=True,
     )
 
 
@@ -960,13 +916,13 @@ def stream_scd2(
 
     State rides a base64-pickle (not JSON) so ``value_col`` may be ANY
     type the batch twin accepts — timestamps, dates, decimals — not just
-    JSON-native scalars."""
+    JSON-native scalars.  That, a (ts, tiebreak)-only sort (values need
+    not be orderable) and one emission per run are why this twin keeps
+    its own GroupState update instead of :func:`_keyed_json_fold`."""
     import base64
     import pickle
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..timeutil import epoch_us
 
     fields = {f.name: f.dataType.simpleString() for f in stream.schema.fields}
     val_t = fields[value_col]
@@ -974,13 +930,8 @@ def stream_scd2(
         f"{key} {fields[key]}, version bigint, {value_col} {val_t}, "
         "valid_from bigint, valid_to bigint, n_events bigint"
     )
-    tb = F.col(tiebreak_col) if tiebreak_col else F.lit(0)
-    src = stream.select(
-        F.col(key),
-        epoch_us(F.col(ts_col)).alias("__t"),
-        tb.alias("__b"),
-        F.col(value_col).alias("__v"),
-    )
+    src = _event_time_src(stream, key, ts_col, tiebreak_col,
+                          F.col(value_col))
 
     def update(k, pdf_iter, state: GroupState):
         import pandas as pd
@@ -993,7 +944,7 @@ def stream_scd2(
             cur_v, version, run_from, run_n = None, 0, None, 0
         rows = []
         for pdf in pdf_iter:
-            rows.extend(zip(pdf["__t"], pdf["__b"], pdf["__v"]))
+            rows.extend(zip(pdf["__t"], pdf["__b"], pdf["__x"]))
         rows.sort(key=lambda r: (r[0], r[1]))
         out = []
         for t, _b, v in rows:
@@ -1112,57 +1063,23 @@ def stream_cusum(
     to the batch operator — integer state, no rounding to argue about.
     Same arrival-order caveat as ``stream_ewma``: a cross-batch late
     event folds in at its arrival batch."""
-    import json
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..timeutil import epoch_us
-
     k_, h_ = int(target_cents), int(alarm_cents)
-    fields = {f.name: f.dataType.simpleString() for f in stream.schema.fields}
-    out_schema = (f"{key} {fields[key]}, n_events bigint, "
-                  "final_cusum bigint, max_cusum bigint, n_alarms bigint")
-    tb = F.col(tiebreak_col) if tiebreak_col else F.lit(0)
-    src = stream.select(
-        F.col(key),
-        epoch_us(F.col(ts_col)).alias("__t"),
-        tb.alias("__b"),
-        (F.col(value_col).cast("decimal(12,2)") * 100).cast("bigint")
-        .alias("__x"),
-    )
+    src = _event_time_src(
+        stream, key, ts_col, tiebreak_col,
+        (F.col(value_col).cast("decimal(12,2)") * 100).cast("bigint"))
 
-    def update(key_, pdf_iter, state: GroupState):
-        import pandas as pd  # local import: runs on executors
+    def step(acc, row):
+        n, s, mx, a = acc
+        ns = max(0, s + (int(row[2]) - k_))
+        return n + 1, ns, max(mx, ns), a + (s <= h_ < ns)
 
-        if state.exists:
-            (st_json,) = state.get
-            n, s, mx, a = json.loads(st_json)
-        else:
-            n = s = mx = a = 0
-        rows = []
-        for pdf in pdf_iter:
-            rows.extend(zip(pdf["__t"], pdf["__b"], pdf["__x"]))
-        rows.sort()
-        for _t, _b, x in rows:
-            ns = max(0, s + (int(x) - k_))
-            if s <= h_ < ns:
-                a += 1
-            mx = max(mx, ns)
-            s = ns
-            n += 1
-        state.update((json.dumps([n, s, mx, a]),))
-        yield pd.DataFrame([{key: key_[0], "n_events": n, "final_cusum": s,
-                             "max_cusum": mx, "n_alarms": a}])
-
-    return (
-        src.groupBy(key)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType="acc string",
-            outputMode=output_mode,
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_json_fold(
+        src, [key], _EVENT_COLS, init=lambda: (0, 0, 0, 0), step=step,
+        emit=lambda acc: dict(zip(
+            ("n_events", "final_cusum", "max_cusum", "n_alarms"), acc)),
+        out_fields="n_events bigint, final_cusum bigint, max_cusum bigint, "
+                   "n_alarms bigint",
+        output_mode=output_mode, ordered=True,
     )
 
 
@@ -1275,12 +1192,6 @@ def stream_holtwinters(
     replay is BITWISE equal to the batch operator (parity-tested),
     emitting the rolling seasonal forecast per key per micro-batch.
     Same arrival-order caveat as ``stream_holt``."""
-    import json
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..timeutil import epoch_us
-
     if min(alpha_halves, beta_halves, gamma_halves) < 1:
         raise ValueError("alpha/beta/gamma halves must be >= 1")
     if period < 2:
@@ -1289,58 +1200,36 @@ def stream_holtwinters(
     beta = 1.0 / (1 << beta_halves)
     gamma = 1.0 / (1 << gamma_halves)
     m, h = period, horizon
-    fields = {f.name: f.dataType.simpleString() for f in stream.schema.fields}
-    out_schema = (f"{key} {fields[key]}, n_events bigint, level double, "
-                  "trend double, season_next double, forecast double")
-    tb = F.col(tiebreak_col) if tiebreak_col else F.lit(0)
-    src = stream.select(
-        F.col(key),
-        epoch_us(F.col(ts_col)).alias("__t"),
-        tb.alias("__b"),
-        F.col(value_col).cast("double").alias("__x"),
-    )
+    src = _event_time_src(stream, key, ts_col, tiebreak_col,
+                          F.col(value_col).cast("double"))
 
-    def update(key_, pdf_iter, state: GroupState):
-        import pandas as pd  # local import: runs on executors
+    def step(acc, row):
+        # the seasonal list is this key's own (fresh from init or JSON),
+        # so it is updated in place
+        n, lv, tr, s = acc
+        x = float(row[2])
+        if n == 0:
+            return 1, x, 0.0, s
+        j = n % m
+        sj = s[j]
+        nl = alpha * (x - sj) + (1 - alpha) * (lv + tr)
+        ntr = (beta * (alpha * ((x - sj) - lv) + (1 - alpha) * tr)
+               + (1 - beta) * tr)
+        s[j] = gamma * (x - nl) + (1 - gamma) * sj
+        return n + 1, nl, ntr, s
 
-        if state.exists:
-            (st_json,) = state.get
-            st = json.loads(st_json)
-            n, lv, tr, s = st[0], st[1], st[2], list(st[3])
-        else:
-            n, lv, tr, s = 0, 0.0, 0.0, [0.0] * m
-        rows = []
-        for pdf in pdf_iter:
-            rows.extend(zip(pdf["__t"], pdf["__b"], pdf["__x"]))
-        rows.sort()
-        for _t, _b, x in rows:
-            x = float(x)
-            if n == 0:
-                lv, tr = x, 0.0
-            else:
-                j = n % m
-                sj = s[j]
-                nl = alpha * (x - sj) + (1 - alpha) * (lv + tr)
-                ntr = (beta * (alpha * ((x - sj) - lv) + (1 - alpha) * tr)
-                       + (1 - beta) * tr)
-                s[j] = gamma * (x - nl) + (1 - gamma) * sj
-                lv, tr = nl, ntr
-            n += 1
-        state.update((json.dumps([n, lv, tr, s]),))
+    def emit(acc):
+        n, lv, tr, s = acc
         sn = s[(n + h - 1) % m]
-        yield pd.DataFrame([{key: key_[0], "n_events": n, "level": lv,
-                             "trend": tr, "season_next": sn,
-                             "forecast": (lv + float(h) * tr) + sn}])
+        return {"n_events": n, "level": lv, "trend": tr,
+                "season_next": sn, "forecast": (lv + float(h) * tr) + sn}
 
-    return (
-        src.groupBy(key)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType="acc string",
-            outputMode=output_mode,
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_json_fold(
+        src, [key], _EVENT_COLS, init=lambda: (0, 0.0, 0.0, [0.0] * m),
+        step=step, emit=emit,
+        out_fields="n_events bigint, level double, trend double, "
+                   "season_next double, forecast double",
+        output_mode=output_mode, ordered=True,
     )
 
 
@@ -1460,40 +1349,22 @@ def stream_confseq(
     by the SAME Spark expression the batch operator ends with
     (``evalstats.confseq_bounds``), so batch and stream agree bitwise
     by construction on equal counts."""
-    import json
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     from ..operators.evalstats import confseq_bounds
 
-    fields = {f.name: f.dataType.simpleString() for f in stream.schema.fields}
-    out_schema = f"{key} {fields[key]}, n_cum bigint, s_cum bigint"
     src = stream.select(
         F.col(key),
         F.col(success_col).cast("bigint").alias("__y"))
 
-    def update(key_, pdf_iter, state: GroupState):
-        import pandas as pd  # local import: runs on executors
+    def step(acc, row):
+        n, s = acc
+        (y,) = row
+        # a null success (NaN in pandas) is a trial, not a success
+        return n + 1, s + (int(y) if y == y else 0)
 
-        if state.exists:
-            (st_json,) = state.get
-            n, s = json.loads(st_json)
-        else:
-            n = s = 0
-        for pdf in pdf_iter:
-            n += int(len(pdf))
-            s += int(pdf["__y"].sum())
-        state.update((json.dumps([n, s]),))
-        yield pd.DataFrame([{key: key_[0], "n_cum": n, "s_cum": s}])
-
-    out = (
-        src.groupBy(key)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType="acc string",
-            outputMode=output_mode,
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    out = _keyed_json_fold(
+        src, [key], ("__y",), init=lambda: (0, 0), step=step,
+        emit=lambda acc: {"n_cum": acc[0], "s_cum": acc[1]},
+        out_fields="n_cum bigint, s_cum bigint",
+        output_mode=output_mode, ordered=False,
     )
     return confseq_bounds(out, alpha_permille=alpha_permille)

@@ -1590,9 +1590,22 @@ def test_adaptive_state_partitions_rules(spark, tmp_path_factory):
     assert staged_parquet_rows(src) == 12
 
 
-def test_run_to_memory_restores_shuffle_partitions(spark, tmp_path_factory):
+def test_run_to_memory_restores_shuffle_partitions(spark, tmp_path_factory,
+                                                   monkeypatch):
+    from pyspark.sql.streaming import DataStreamWriter
+
     from map_reduce_folds_spark.streaming import (
         read_parquet_stream, run_to_memory, stream_confseq)
+
+    started = []
+    start = DataStreamWriter.start
+
+    def spy(self, *args, **kwargs):
+        q = start(self, *args, **kwargs)
+        started.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", spy)
 
     p = str(tmp_path_factory.mktemp("rtm_restore"))
     spark.createDataFrame([(1, 1), (1, 0), (2, 1)], ["k", "y"]) \
@@ -1605,3 +1618,42 @@ def test_run_to_memory_restores_shuffle_partitions(spark, tmp_path_factory):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     rows = {r["k"]: (r["n_cum"], r["s_cum"]) for r in got.collect()}
     assert rows == {1: (2, 1), 2: (1, 1)}
+    # the pin reached the stateful operator although the session value
+    # was restored as soon as the query started
+    (q,) = started
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 2
+
+
+def test_confseq_stream_stateful_leaves_no_temp_dirs(spark, tmp_path,
+                                                     monkeypatch):
+    """The two-batch replay stager removes both of its staging
+    directories once the stream has drained."""
+    import tempfile
+
+    from map_reduce_folds_spark.queries.relational import (
+        confseq_stream_stateful)
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert confseq_stream_stateful(spark, SF_DIR).count() > 0
+    assert os.listdir(tmp_path) == []
+
+
+def test_sessionize_stream_stateful_directory_shaped_events(spark, tmp_path):
+    """A Spark-written directory ``events.parquet/`` stages part by part
+    and sessionizes exactly as the single-file fixture does."""
+    import shutil
+
+    from map_reduce_folds_spark.queries.relational import (
+        sessionize_stream_stateful)
+
+    parts = tmp_path / "sf_dir" / "events.parquet"
+    parts.mkdir(parents=True)
+    shutil.copyfile(os.path.join(SF_DIR, "events.parquet"),
+                    parts / "part-00000.parquet")
+    (parts / "_SUCCESS").touch()
+
+    def rows(sf_dir):
+        return sorted(sessionize_stream_stateful(spark, str(sf_dir)).collect())
+
+    got = rows(tmp_path / "sf_dir")
+    assert got and got == rows(SF_DIR)
