@@ -25,17 +25,70 @@ near-clique dedup graphs close in 2-3 rounds, and even a pathological
 covers any realistic graph.
 
 100 TB shape: labels and edges shuffle on node id each round — linear in
-|E|, never quadratic; every round's labels are eagerly
-``localCheckpoint``'d so neither the lineage nor the logical plan grows
-with the iteration count (see the in-function comment for why persist()
-alone is not enough).  The convergence check collects ONE aggregate per
-round (bounded driver traffic, inherent to an iterative fixpoint).
+|E|, never quadratic; every round's labels pass through a lineage cut (a
+lazy ``localCheckpoint`` that the round's fixpoint aggregate
+materializes, or a parquet slot under ``checkpoint_dir``) so neither the
+lineage nor the logical plan grows with the iteration count (see the
+in-function comment for why persist() alone is not enough).  The
+convergence check collects ONE aggregate per round (bounded driver
+traffic, inherent to an iterative fixpoint).
+
+The six iterative operators (connected components, PageRank, BFS, label
+propagation and both k-core peels) share one round driver,
+:func:`_iterate`, and one release point for their cached relations,
+:func:`_pinned`.  Each step keeps its own lineage cut.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
+
+
+@contextmanager
+def _pinned():
+    """Yield ``pin(df, key=None)``, which persists ``df`` and returns the
+    cached frame; every pinned frame is unpersisted when the block exits,
+    whether it returns or raises (bad input, non-convergence, a failed
+    job).
+
+    With ``key``, ``pin`` caches ``df`` hash-partitioned AND sorted by that
+    column (the r14 layout pin).  Cached plans keep their partitioning
+    (AQE does not rewrite them by default), so a per-round sort-merge join
+    on ``key`` finds its distribution and ordering already satisfied: each
+    round re-shuffles only the node-sized side, and the edge relation
+    crosses the network once at build instead of once per round.  A
+    ``localCheckpoint`` would not do: it drops the partitioning (LogicalRDD
+    scan, measured: Exchange re-inserted above it)."""
+    held: list[DataFrame] = []
+
+    def pin(df: DataFrame, key: str | None = None) -> DataFrame:
+        if key is not None:
+            df = df.repartition(key).sortWithinPartitions(key)
+        df = df.persist()
+        held.append(df)
+        return df
+
+    try:
+        yield pin
+    finally:
+        for df in held:
+            df.unpersist()
+
+
+def _iterate(state, step, rounds: int, until=None):
+    """A round loop as a fold over rounds: ``state = step(state, r)`` for
+    ``r`` in ``range(rounds)``, stopping early once ``until(prev, cur)``
+    holds.  Returns ``(state, converged)``; ``converged`` is whether
+    ``until`` held (always False without ``until``)."""
+    for r in range(rounds):
+        prev, state = state, step(state, r)
+        if until is not None and until(prev, state):
+            return state, True
+    return state, False
 
 
 def symmetric_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -185,15 +238,6 @@ def connected_components(
         f1 = contract_pairs_local(edges, src, dst)
         edges = contract_pairs_local(f1.repartition("u"), "u", "v")
         src, dst = "u", "v"
-    # r14 layout pin (same recipe as pagerank's ed): sym is scanned by
-    # the seed groupBy("u") and by EVERY round's join on "u"; caching it
-    # hash-partitioned + sorted on "u" lets both reuse the layout
-    # (cached plans keep their partitioning), so rounds shuffle only the
-    # node-sized label table — the edge relation crosses the network
-    # once at build instead of once per round.
-    sym = (symmetric_edges(edges, src, dst)
-           .repartition("u").sortWithinPartitions("u")
-           .persist())
     # seed: each node's label = min(self, direct neighbors) — this folds
     # the first propagation round into the seed aggregation for free.
     # EVERY round's labels pass through cut(): the round body references
@@ -203,8 +247,8 @@ def connected_components(
     # 2.6 s → 8.8 s → 48 s → 140 s per round on a 21k-edge graph with
     # persist() alone (persist caches data, not plan size).
     def cut(df: DataFrame, rnd: int) -> DataFrame:
-        """Lineage/plan hard cut per round (see below).  In-memory: lazy
-        localCheckpoint — the label_sum aggregate is its first action, so
+        """Lineage/plan hard cut per round (see above).  In-memory: lazy
+        localCheckpoint — cut_and_sum's aggregate is its first action, so
         one job computes, caches, and measures.  Table-backed: write to
         one of two alternating slots (the executing job only reads the
         OTHER slot, so the overwrite is safe) and scan it back."""
@@ -214,61 +258,65 @@ def connected_components(
         df.write.mode("overwrite").parquet(path)
         return df.sparkSession.read.parquet(path)
 
-    # single-scan seed: min(self, neighbors) = least(u, min(v)) — NOT a
-    # two-branch union over sym.  A union's branches are separate stages
-    # that race to populate sym's cache on first materialization, so the
-    # expensive upstream pair lineage (LSH candidate + verify) could
-    # compute TWICE in the seed job; one groupBy scans it exactly once.
-    labels = cut(
-        sym.groupBy("u").agg(F.min("v").alias("mv"))
-        .select("u", F.least(F.col("mv"), F.col("u")).alias("label")),
-        0,
-    )
-    def label_sum(lb: DataFrame):
+    def cut_and_sum(df: DataFrame, rnd: int):
         # labels are per-node monotone non-increasing, so the exact total
         # (decimal(38) — no overflow at any node count) is a fixpoint
         # detector: sum unchanged ⇔ no label changed.  One tiny aggregate
         # per round instead of a new-vs-old join.
-        return lb.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
+        lb = cut(df, rnd)
+        total = lb.agg(F.sum(F.col("label").cast("decimal(38,0)")))
+        return lb, total.first()[0]
 
-    prev_sum = label_sum(labels)
-    try:
-        for it in range(max_iter):
-            # pointer doubling: u may also inherit its label's label —
-            # label(label(u)) is in u's component by the propagation
-            # invariant, and chasing two hops per round turns O(diameter)
-            # rounds into O(log n) on path-shaped components (the classic
-            # shortcutting step; near-clique dedup graphs converge in 2-3
-            # rounds either way)
-            jumped = (
-                labels.alias("l1")
-                .join(labels.alias("l2"),
-                      F.col("l1.label") == F.col("l2.u"))
-                .select(F.col("l1.u").alias("u"),
-                        F.col("l2.label").alias("label"))
-            )
-            # propagate: every neighbor of u may inherit u's label
-            prop = cut(
-                sym.join(labels, "u")
-                .select(F.col("v").alias("u"), "label")
-                .union(labels)
-                .union(jumped)
-                .groupBy("u").agg(F.min("label").alias("label")),
-                it + 1,
-            )
-            cur_sum = label_sum(prop)
-            labels = prop
-            if cur_sum == prev_sum:
-                return labels.select(F.col("u").alias("node"), "label") \
-                    .withColumnRenamed("label", "component")
-            prev_sum = cur_sum
+    def step(state, it: int):
+        labels = state[0]
+        # pointer doubling: u may also inherit its label's label —
+        # label(label(u)) is in u's component by the propagation
+        # invariant, and chasing two hops per round turns O(diameter)
+        # rounds into O(log n) on path-shaped components (the classic
+        # shortcutting step; near-clique dedup graphs converge in 2-3
+        # rounds either way)
+        jumped = (
+            labels.alias("l1")
+            .join(labels.alias("l2"),
+                  F.col("l1.label") == F.col("l2.u"))
+            .select(F.col("l1.u").alias("u"),
+                    F.col("l2.label").alias("label"))
+        )
+        # propagate: every neighbor of u may inherit u's label
+        return cut_and_sum(
+            sym.join(labels, "u")
+            .select(F.col("v").alias("u"), "label")
+            .union(labels)
+            .union(jumped)
+            .groupBy("u").agg(F.min("label").alias("label")),
+            it + 1,
+        )
+
+    with _pinned() as pin:
+        # sym is scanned by the seed groupBy("u") and by every round's
+        # join on "u": pinned on "u", so rounds shuffle only labels
+        sym = pin(symmetric_edges(edges, src, dst), "u")
+        # single-scan seed: min(self, neighbors) = least(u, min(v)) — NOT
+        # a two-branch union over sym.  A union's branches are separate
+        # stages that race to populate sym's cache on first
+        # materialization, so the expensive upstream pair lineage (LSH
+        # candidate + verify) could compute TWICE in the seed job; one
+        # groupBy scans it exactly once.
+        seed = cut_and_sum(
+            sym.groupBy("u").agg(F.min("v").alias("mv"))
+            .select("u", F.least(F.col("mv"), F.col("u")).alias("label")),
+            0,
+        )
+        (labels, _), converged = _iterate(
+            seed, step, max_iter, until=lambda prev, cur: prev[1] == cur[1])
+    if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds — "
             "with pointer doubling this takes ~log2(longest path) rounds, "
             "so raise max_iter (25 covers components of ~2^25 path length)"
         )
-    finally:
-        sym.unpersist()
+    return labels.select(F.col("u").alias("node"), "label") \
+        .withColumnRenamed("label", "component")
 
 
 def components_of_pairs(
@@ -381,88 +429,83 @@ def pagerank(
     node count N is one driver count (needed for the teleport literal;
     bounded metadata, inherent to the formula)."""
     num, den = damping
-    # persist: the edge relation is re-read every round, and the caller's
-    # lineage may be an expensive pipeline (same reason CC persists sym)
-    if weight_col is not None:
-        e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"),
-                         F.col(weight_col).cast("bigint").alias("w")).persist()
-    else:
-        e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).persist()
-    nodes = (
-        e.select(F.col("s").alias("u"))
-        .union(e.select(F.col("t").alias("u")))
-        .distinct().persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("pagerank: empty edge list")
-    if seeds is not None:
-        # personalized (topic-sensitive) PageRank: all teleport mass goes
-        # to the seed set — ranks become proximity-to-seeds scores.  The
-        # seed list is a driver-side literal (bounded metadata; an IN
-        # predicate over ≤ thousands of ids — for larger seed sets join a
-        # seed table instead)
-        seeds = sorted(set(seeds))
-        if not seeds:
-            raise ValueError("pagerank: empty seeds list")
-        n_present = nodes.where(F.col("u").isin(seeds)).count()
-        if n_present != len(seeds):
-            raise ValueError(
-                f"pagerank: {len(seeds) - n_present} of {len(seeds)} seeds "
-                "do not appear in the edge list — their teleport mass would "
-                "silently vanish (all-absent seeds would zero every rank); "
-                "fix the seed ids or drop the absent ones explicitly")
-        r0_amt = scale // len(seeds)
-        base_amt = ((den - num) * r0_amt) // den
-        is_seed = F.col("u").isin(seeds)
-        r0_col = F.when(is_seed, F.lit(r0_amt)).otherwise(F.lit(0))
-        base_col = F.when(is_seed, F.lit(base_amt)).otherwise(F.lit(0))
-    else:
-        r0_col = F.lit(scale // n)
-        base_col = F.lit(((den - num) * (scale // n)) // den)
-    if weight_col is not None:
-        deg = e.groupBy("s").agg(F.sum("w").alias("d")).persist()
-        # overflow guard: contributions compute r·w with r ≤ scale, so a
-        # single edge weight beyond (2^63-1)/scale wraps the bigint
-        # product silently (ANSI off) or errors in the oracle — refuse
-        # loudly; pre-scale weights (divide the batch by a constant) to
-        # stay exact under the cap
-        w_cap = (2 ** 63 - 1) // scale
-        w_max = e.agg(F.max("w")).first()[0]
-        if w_max is not None and w_max > w_cap:
-            raise ValueError(
-                f"pagerank: max edge weight {w_max} exceeds {w_cap} "
-                f"(= (2^63-1)/scale at scale={scale}); r*w would overflow "
-                "int64 — divide the weights by a common factor first "
-                "(ranks are invariant to uniform weight scaling)")
-        contrib_expr = "(r * w) div d"
-    else:
-        deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("d")).persist()
-        contrib_expr = "r div d"
-    # r14 loop-invariant hoist + layout pin: deg depends only on e, so
-    # the per-round ``.join(deg, "s")`` re-did the same degree attach
-    # n_iter times; join it ONCE and persist the result hash-partitioned
-    # AND sorted by the join key.  The cached layout satisfies the
-    # sort-merge join's distribution+ordering requirement (cached plans
-    # keep their partitioning — AQE does not rewrite them by default),
-    # so each round's join re-shuffles only the node-sized rank table,
-    # never the edges: per-round Exchanges drop from 3 (e, r, contrib)
-    # to 2 node-scale ones (r, contrib partial-agg).  At |E| >> |V| the
-    # edge shuffle per round is pagerank's dominant cost.  Integer
-    # fixed-point arithmetic ⇒ ranks are bit-identical regardless.
-    ed = (e.join(deg, "s")
-          .repartition("s").sortWithinPartitions("s")
-          .persist())
-    try:
-        r = nodes.withColumn("r", r0_col.cast("bigint"))
-        for _ in range(n_iter):
+    with _pinned() as pin:
+        # pinned: the edge relation is re-read every round, and the
+        # caller's lineage may be an expensive pipeline
+        if weight_col is not None:
+            e = pin(edges.select(F.col(src).alias("s"), F.col(dst).alias("t"),
+                                 F.col(weight_col).cast("bigint").alias("w")))
+        else:
+            e = pin(edges.select(F.col(src).alias("s"), F.col(dst).alias("t")))
+        nodes = pin(
+            e.select(F.col("s").alias("u"))
+            .union(e.select(F.col("t").alias("u")))
+            .distinct()
+        )
+        n = nodes.count()
+        if n == 0:
+            raise ValueError("pagerank: empty edge list")
+        if seeds is not None:
+            # personalized (topic-sensitive) PageRank: all teleport mass
+            # goes to the seed set — ranks become proximity-to-seeds
+            # scores.  The seed list is a driver-side literal (bounded
+            # metadata; an IN predicate over ≤ thousands of ids — for
+            # larger seed sets join a seed table instead)
+            seeds = sorted(set(seeds))
+            if not seeds:
+                raise ValueError("pagerank: empty seeds list")
+            n_present = nodes.where(F.col("u").isin(seeds)).count()
+            if n_present != len(seeds):
+                raise ValueError(
+                    f"pagerank: {len(seeds) - n_present} of {len(seeds)} "
+                    "seeds do not appear in the edge list — their teleport "
+                    "mass would silently vanish (all-absent seeds would zero "
+                    "every rank); fix the seed ids or drop the absent ones "
+                    "explicitly")
+            r0_amt = scale // len(seeds)
+            base_amt = ((den - num) * r0_amt) // den
+            is_seed = F.col("u").isin(seeds)
+            r0_col = F.when(is_seed, F.lit(r0_amt)).otherwise(F.lit(0))
+            base_col = F.when(is_seed, F.lit(base_amt)).otherwise(F.lit(0))
+        else:
+            r0_col = F.lit(scale // n)
+            base_col = F.lit(((den - num) * (scale // n)) // den)
+        if weight_col is not None:
+            deg = pin(e.groupBy("s").agg(F.sum("w").alias("d")))
+            # overflow guard: contributions compute r·w with r ≤ scale, so
+            # a single edge weight beyond (2^63-1)/scale wraps the bigint
+            # product silently (ANSI off) or errors in the oracle — refuse
+            # loudly; pre-scale weights (divide the batch by a constant)
+            # to stay exact under the cap
+            w_cap = (2 ** 63 - 1) // scale
+            w_max = e.agg(F.max("w")).first()[0]
+            if w_max is not None and w_max > w_cap:
+                raise ValueError(
+                    f"pagerank: max edge weight {w_max} exceeds {w_cap} "
+                    f"(= (2^63-1)/scale at scale={scale}); r*w would "
+                    "overflow int64 — divide the weights by a common factor "
+                    "first (ranks are invariant to uniform weight scaling)")
+            contrib_expr = "(r * w) div d"
+        else:
+            deg = pin(e.groupBy("s").agg(F.count(F.lit(1)).alias("d")))
+            contrib_expr = "r div d"
+        # r14 loop-invariant hoist: deg depends only on e, so the degree
+        # attach is joined ONCE, outside the rounds, and pinned on the
+        # round join's key "s" — per-round Exchanges drop from 3 (e, r,
+        # contrib) to 2 node-scale ones (r, contrib partial-agg).  At
+        # |E| >> |V| the edge shuffle per round is pagerank's dominant
+        # cost.  Integer fixed-point arithmetic ⇒ ranks are bit-identical
+        # regardless.
+        ed = pin(e.join(deg, "s"), "s")
+
+        def step(r: DataFrame, _: int) -> DataFrame:
             contrib = (
                 ed.join(r.withColumnRenamed("u", "s"), "s")
                 .select(F.col("t").alias("u"),
                         F.expr(contrib_expr).alias("c"))
                 .groupBy("u").agg(F.sum("c").alias("csum"))
             )
-            r = (
+            return (
                 nodes.join(contrib, "u", "left")
                 .select(
                     "u",
@@ -472,20 +515,18 @@ def pagerank(
                 )
                 # EAGER: pagerank runs no per-round action of its own
                 # (unlike CC's fixpoint aggregate), so a lazy checkpoint
-                # would defer all 10 rounds past the finally-unpersist and
-                # recompute the edge/degree caches from scratch per round
+                # would defer all rounds past the release of the pinned
+                # edge/degree caches and recompute them per round
                 .localCheckpoint(eager=True)
             )
-        return r.select(
-            F.col("u").alias("node"),
-            F.col("r").alias("rank_scaled"),
-            (F.col("r").cast("double") / F.lit(float(scale))).alias("rank"),
-        )
-    finally:
-        nodes.unpersist()
-        deg.unpersist()
-        e.unpersist()
-        ed.unpersist()
+
+        r, _ = _iterate(nodes.withColumn("r", r0_col.cast("bigint")),
+                        step, n_iter)
+    return r.select(
+        F.col("u").alias("node"),
+        F.col("r").alias("rank_scaled"),
+        (F.col("r").cast("double") / F.lit(float(scale))).alias("rank"),
+    )
 
 
 def pagerank_sql(
@@ -660,54 +701,44 @@ def bfs_hops(
     Deterministic: hop distance is a well-defined graph property — no
     tie-break needed."""
     spark = edges.sparkSession
-    # r14 layout pin (the pagerank/CC recipe): every level joins sym on
-    # "u" with the frontier; cache it hash-partitioned + sorted by "u" so
-    # each level re-shuffles only the frontier, never the edge relation.
-    sym = (symmetric_edges(edges, src, dst)
-           .repartition("u").sortWithinPartitions("u")
-           .persist())
-    # Seeds adopt the EDGE column's type (string-keyed graphs included) —
-    # a hard bigint cast would NULL string ids and silently return an
-    # empty neighborhood.  Any seed the cast cannot represent raises.
-    node_type = sym.schema["u"].dataType
-    seed_df = spark.createDataFrame(
-        [(s,) for s in seeds], [src]
-    ).select(F.col(src).try_cast(node_type).alias("node")).distinct()
-    n_null = seed_df.where(F.col("node").isNull()).count()
-    if n_null:
-        sym.unpersist()
-        raise ValueError(
-            f"bfs_hops: {n_null} seed(s) not representable as the edge "
-            f"node type {node_type.simpleString()}")
-    frontier = seed_df.withColumn("hops", F.lit(0).cast("int")) \
-        .localCheckpoint(eager=True)
-    # visited = union of per-level frontiers, each already checkpointed:
-    # the union needs NO checkpoint of its own (its lineage is one flat
-    # RDD per level), which halves the eager jobs per level vs
-    # re-checkpointing the accumulated union every round
-    frontiers = [frontier]
-    try:
-        for h in range(1, max_hops + 1):
-            visited = frontiers[0]
-            for f_ in frontiers[1:]:
-                visited = visited.union(f_)
-            nxt = (
-                sym.join(frontier.select(F.col("node").alias("u")), "u")
-                .select(F.col("v").alias("node")).distinct()
-                .join(visited.select("node"), "node", "left_anti")
-                .withColumn("hops", F.lit(h).cast("int"))
-                .localCheckpoint(eager=True)
-            )
-            if nxt.isEmpty():
-                break
-            frontiers.append(nxt)
-            frontier = nxt
-        out = frontiers[0]
-        for f_ in frontiers[1:]:
-            out = out.union(f_)
-        return out
-    finally:
-        sym.unpersist()
+
+    def step(frontiers: list, h: int) -> list:
+        # visited = union of per-level frontiers, each already
+        # checkpointed: the union needs NO checkpoint of its own (its
+        # lineage is one flat RDD per level), which halves the eager jobs
+        # per level vs re-checkpointing the accumulated union every round
+        visited = reduce(DataFrame.union, frontiers)
+        nxt = (
+            sym.join(frontiers[-1].select(F.col("node").alias("u")), "u")
+            .select(F.col("v").alias("node")).distinct()
+            .join(visited.select("node"), "node", "left_anti")
+            .withColumn("hops", F.lit(h + 1).cast("int"))
+            .localCheckpoint(eager=True)
+        )
+        # an empty level is the fixpoint: the frontier list stays as is
+        return frontiers if nxt.isEmpty() else frontiers + [nxt]
+
+    with _pinned() as pin:
+        # every level joins sym on "u" with the frontier
+        sym = pin(symmetric_edges(edges, src, dst), "u")
+        # Seeds adopt the EDGE column's type (string-keyed graphs
+        # included) — a hard bigint cast would NULL string ids and
+        # silently return an empty neighborhood.  Any seed the cast
+        # cannot represent raises.
+        node_type = sym.schema["u"].dataType
+        seed_df = spark.createDataFrame(
+            [(s,) for s in seeds], [src]
+        ).select(F.col(src).try_cast(node_type).alias("node")).distinct()
+        n_null = seed_df.where(F.col("node").isNull()).count()
+        if n_null:
+            raise ValueError(
+                f"bfs_hops: {n_null} seed(s) not representable as the edge "
+                f"node type {node_type.simpleString()}")
+        frontiers, _ = _iterate(
+            [seed_df.withColumn("hops", F.lit(0).cast("int"))
+             .localCheckpoint(eager=True)],
+            step, max_hops, until=lambda prev, cur: cur is prev)
+    return reduce(DataFrame.union, frontiers)
 
 
 def bfs_hops_factored(
@@ -950,45 +981,35 @@ def label_propagation(
     back — all linear in |E|; per-round ``localCheckpoint`` keeps the
     plan O(1) like :func:`pagerank`.  Output: ``(node, label)`` with
     NULL for never-reached nodes."""
-    # r14 layout pin (the pagerank/CC recipe): every round joins the edge
-    # relation on "v" (labels attach to the neighbor side), so cache it
-    # hash-partitioned AND sorted by that key — cached plans keep their
-    # partitioning, the per-round sort-merge join then re-shuffles only
-    # the node-sized label table, and the edge relation crosses the
-    # network once at build instead of once per round.
-    e = (symmetric_edges(edges, src, dst)
-         .repartition("v").sortWithinPartitions("v")
-         .persist())
-    nodes = e.select("u").distinct().persist()
-    sd = (seeds.select(F.col(node_col).alias("u"),
-                       F.col(label_col).alias("__seed"))
-          .persist())
-    try:
-        cur = (nodes.join(sd, "u", "left")
-               .select("u", F.col("__seed").alias("__lab")))
-        for _ in range(int(n_iter)):
-            contrib = (
-                e.join(cur.select(F.col("u").alias("v"),
-                                  F.col("__lab").alias("__nl")), "v")
-                .where(F.col("__nl").isNotNull())
-                .groupBy("u", "__nl")
-                .agg(F.count(F.lit(1)).alias("__c"))
-            )
-            pick = (contrib.groupBy("u")
-                    .agg(F.min(F.struct(
-                        (-F.col("__c")).alias("d"),
-                        F.col("__nl").alias("l"))).alias("m"))
-                    .select("u", F.col("m.l").alias("__pick")))
-            cur = (nodes.join(sd, "u", "left").join(pick, "u", "left")
-                   .select("u", F.coalesce("__seed", "__pick")
-                           .alias("__lab"))
-                   .localCheckpoint(eager=True))
-        return cur.select(F.col("u").alias(node_col),
-                          F.col("__lab").alias(label_col))
-    finally:
-        nodes.unpersist()
-        sd.unpersist()
-        e.unpersist()
+    def step(cur: DataFrame, _: int) -> DataFrame:
+        contrib = (
+            e.join(cur.select(F.col("u").alias("v"),
+                              F.col("__lab").alias("__nl")), "v")
+            .where(F.col("__nl").isNotNull())
+            .groupBy("u", "__nl")
+            .agg(F.count(F.lit(1)).alias("__c"))
+        )
+        pick = (contrib.groupBy("u")
+                .agg(F.min(F.struct(
+                    (-F.col("__c")).alias("d"),
+                    F.col("__nl").alias("l"))).alias("m"))
+                .select("u", F.col("m.l").alias("__pick")))
+        return (nodes.join(sd, "u", "left").join(pick, "u", "left")
+                .select("u", F.coalesce("__seed", "__pick").alias("__lab"))
+                .localCheckpoint(eager=True))
+
+    with _pinned() as pin:
+        # every round joins the edge relation on "v" (labels attach to
+        # the neighbor side)
+        e = pin(symmetric_edges(edges, src, dst), "v")
+        nodes = pin(e.select("u").distinct())
+        sd = pin(seeds.select(F.col(node_col).alias("u"),
+                              F.col(label_col).alias("__seed")))
+        cur, _ = _iterate(nodes.join(sd, "u", "left")
+                          .select("u", F.col("__seed").alias("__lab")),
+                          step, int(n_iter))
+    return cur.select(F.col("u").alias(node_col),
+                      F.col("__lab").alias(label_col))
 
 
 def label_propagation_sql(
@@ -1130,52 +1151,41 @@ def kcore_peel(
     Output: ``(node, deg)`` — surviving nodes with their degree inside
     the final core (so every deg ≥ k); empty when the k-core is empty.
     """
-    # the edge view is referenced 2·(rounds+1) times — without a
-    # materialization each sweep would REPLAY the upstream candidate-pair
-    # pipeline (the pipeline_curation_v5 shared-stage lesson).  r14: the
-    # one-time compute is a CACHE partitioned + sorted by "v" instead of
-    # a localCheckpoint — checkpoints drop partitioning (LogicalRDD scan,
-    # measured: Exchange re-inserted above it) while cached plans keep
-    # theirs, so every sweep's v-side join reuses the layout and shuffles
-    # only the node-sized survivor table.  The eager count() populates
-    # the cache in ONE job before the sweeps fan out (two concurrent
-    # first-reference stages would otherwise race-compute the expensive
-    # pair lineage twice).
-    e = (symmetric_edges(edges, src, dst)
-         .repartition("v").sortWithinPartitions("v")
-         .persist())
-    try:
+    def core_degrees(sv: DataFrame) -> DataFrame:
+        # v-join FIRST (reuses e's pinned v-layout), u-join second: the
+        # sort-merge join on "u" leaves both sides u-partitioned, so the
+        # groupBy("u") right after it needs no further Exchange — one
+        # edge-relation shuffle per sweep instead of three.
+        alive = (e.join(sv.withColumnRenamed("node", "v"), "v")
+                 .join(sv.withColumnRenamed("node", "u"), "u"))
+        return alive.groupBy("u").agg(
+            F.count(F.lit(1)).cast("bigint").alias("deg"))
+
+    def sweep(sv: DataFrame, _: int) -> DataFrame:
+        # each sweep references surv TWICE (u and v sides) — without a
+        # per-round snapshot the lineage doubles per sweep (2^R replans)
+        return (core_degrees(sv).where(F.col("deg") >= k)
+                .select(F.col("u").alias("node"))
+                .localCheckpoint(eager=False))
+
+    with _pinned() as pin:
+        # the edge view is referenced 2·(rounds+1) times — without a
+        # materialization each sweep would REPLAY the upstream
+        # candidate-pair pipeline (the pipeline_curation_v5 shared-stage
+        # lesson).  The eager count() populates the cache in ONE job
+        # before the sweeps fan out (two concurrent first-reference
+        # stages would otherwise race-compute the expensive pair lineage
+        # twice).
+        e = pin(symmetric_edges(edges, src, dst), "v")
         e.count()
-        surv = e.select(F.col("u").alias("node")).distinct()
-
-        def core_degrees(sv: DataFrame) -> DataFrame:
-            # v-join FIRST (reuses e's cached v-layout), u-join second:
-            # the sort-merge join on "u" leaves both sides u-partitioned,
-            # so the groupBy("u") right after it needs no further
-            # Exchange — one edge-relation shuffle per sweep instead of
-            # three.
-            alive = (e.join(sv.withColumnRenamed("node", "v"), "v")
-                     .join(sv.withColumnRenamed("node", "u"), "u"))
-            return alive.groupBy("u").agg(
-                F.count(F.lit(1)).cast("bigint").alias("deg"))
-
-        for _ in range(int(rounds)):
-            # each sweep references surv TWICE (u and v sides) — without
-            # a per-round snapshot the lineage doubles per sweep (2^R
-            # replans)
-            surv = (core_degrees(surv).where(F.col("deg") >= k)
-                    .select(F.col("u").alias("node"))
-                    .localCheckpoint(eager=False))
-        # EAGER final snapshot so e can be unpersisted before returning
-        # (r15, the pagerank finally-discipline): the cache otherwise
-        # outlives the call in the CacheManager for the session lifetime,
-        # and a lazy snapshot would recompute the whole pair pipeline
-        # from scratch once the cache is gone.  Node-sized result.
+        surv, _ = _iterate(e.select(F.col("u").alias("node")).distinct(),
+                           sweep, int(rounds))
+        # EAGER final snapshot: the pinned edge cache is released on
+        # return, and a lazy snapshot would then recompute the whole pair
+        # pipeline from scratch.  Node-sized result.
         return (core_degrees(surv)
                 .select(F.col("u").alias("node"), "deg")
                 .localCheckpoint(eager=True))
-    finally:
-        e.unpersist()
 
 
 def kcore_peel_sql(edges_sql: str, k: int, rounds: int) -> str:
@@ -1236,47 +1246,41 @@ def kcore_peel_weighted(
     surviving nodes — deg is each underlying vertex's degree inside
     the final core.
     """
-    # r14: cache partitioned + sorted by "v" (checkpoints drop
-    # partitioning, caches keep it — see kcore_peel) so each sweep's
-    # v-side join reuses the layout; eager count() populates the cache
-    # in one job before the sweep stages fan out.
-    e = ((symmetric_edges(edges, "u", "v")
-          .repartition("v").sortWithinPartitions("v").persist())
-         if set(edges.columns) >= {"u", "v"} else None)
-    assert e is not None, "edges must have columns (u, v)"
-    try:
+    if not set(edges.columns) >= {"u", "v"}:
+        raise ValueError("edges must have columns (u, v)")
+
+    def degrees(surv: DataFrame) -> DataFrame:
+        # v-join first (pinned layout), u-join second: the u-side
+        # sort-merge join leaves the relation u-partitioned so the
+        # groupBy("u") adds no Exchange (same recipe as kcore_peel)
+        nb = (e.join(surv.select(F.col("node").alias("v"),
+                                 F.col("m").alias("__mv")), "v")
+              .join(surv.select(F.col("node").alias("u")), "u")
+              .groupBy("u").agg(F.sum("__mv").alias("__nbm")))
+        return (surv.join(nb.withColumnRenamed("u", "node"),
+                          "node", "left")
+                .select("node", "m",
+                        (F.col("m") - 1 + F.coalesce(F.col("__nbm"),
+                                                     F.lit(0)))
+                        .cast("bigint").alias("deg")))
+
+    def sweep(surv: DataFrame, _: int) -> DataFrame:
+        # degrees() reads surv twice (u and v sides): snapshot per sweep
+        # or the lineage doubles per round (2^R replans — measured 72 s
+        # vs 8 s at sf0.01)
+        return degrees(surv).where(F.col("deg") >= k) \
+            .select("node", "m").localCheckpoint(eager=False)
+
+    with _pinned() as pin:
+        # eager count() populates the cache in one job before the sweep
+        # stages fan out (see kcore_peel)
+        e = pin(symmetric_edges(edges, "u", "v"), "v")
         e.count()
         w = weights.select(F.col(weights.columns[0]).alias("node"),
                            F.col(weights.columns[1]).cast("bigint")
                            .alias("m")).localCheckpoint(eager=False)
-
-        def degrees(surv: DataFrame) -> DataFrame:
-            # v-join first (cached layout), u-join second: the u-side
-            # sort-merge join leaves the relation u-partitioned so the
-            # groupBy("u") adds no Exchange (same recipe as kcore_peel)
-            nb = (e.join(surv.select(F.col("node").alias("v"),
-                                     F.col("m").alias("__mv")), "v")
-                  .join(surv.select(F.col("node").alias("u")), "u")
-                  .groupBy("u").agg(F.sum("__mv").alias("__nbm")))
-            return (surv.join(nb.withColumnRenamed("u", "node"),
-                              "node", "left")
-                    .select("node", "m",
-                            (F.col("m") - 1 + F.coalesce(F.col("__nbm"),
-                                                         F.lit(0)))
-                            .cast("bigint").alias("deg")))
-
-        surv = w
-        for _ in range(int(rounds)):
-            # degrees() reads surv twice (u and v sides): snapshot per
-            # sweep or the lineage doubles per round (2^R replans —
-            # measured 72 s vs 8 s at sf0.01)
-            surv = degrees(surv).where(F.col("deg") >= k) \
-                .select("node", "m").localCheckpoint(eager=False)
+        surv, _ = _iterate(w, sweep, int(rounds))
         # final pass mirrors kcore_peel: degrees WITHIN the final
         # surviving set, unfiltered (short of the fixpoint they can dip
-        # below k).  EAGER snapshot so e can be unpersisted before
-        # returning (r15, the pagerank finally-discipline — see
-        # kcore_peel).
+        # below k), snapshotted eagerly before the edge cache is released
         return degrees(surv).localCheckpoint(eager=True)
-    finally:
-        e.unpersist()

@@ -802,25 +802,104 @@ def test_kcore_weighted_factored_equals_doc_level(spark):
         assert doc
 
 
-def test_kcore_unpersists_edge_cache(spark):
-    """r15: both peels eager-materialize their result and unpersist the
-    edge cache before returning (the pagerank finally-discipline) — no
-    CacheManager entry survives the call, and the returned frame stays
-    collectable after the cache is gone."""
-    from map_reduce_folds_spark.operators.graph import (
-        kcore_peel, kcore_peel_weighted)
+def _tri_tail(spark):
+    # triangle 1-2-3 with a tail 3-4, also read as directed 1→2→3→4, 1→3
+    return spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4)], "a bigint, b bigint")
 
+
+def _node_weights(spark):
+    return spark.createDataFrame([(1, 2), (2, 1), (3, 1)],
+                                 "node bigint, m bigint")
+
+
+def _failing_edges(spark):
+    g = _tri_tail(spark)
+    return g.select("a", F.when(F.col("a") == 3, F.raise_error(
+        F.lit("bad edge row"))).otherwise(F.col("b")).alias("b"))
+
+
+def _chain12(spark):
+    return spark.createDataFrame([(i, i + 1) for i in range(12)],
+                                 "a bigint, b bigint")
+
+
+_LIFECYCLE_CASES = [
+    pytest.param(
+        lambda s: G.connected_components(_tri_tail(s), "a", "b"),
+        lambda rows: {r["node"]: r["component"] for r in rows}
+        == {1: 1, 2: 1, 3: 1, 4: 1},
+        id="connected_components"),
+    pytest.param(
+        lambda s: G.pagerank(_tri_tail(s), "a", "b"),
+        lambda rows: {r["node"] for r in rows} == {1, 2, 3, 4},
+        id="pagerank"),
+    pytest.param(
+        lambda s: G.bfs_hops(_tri_tail(s), [1], "a", "b"),
+        lambda rows: {r["node"]: r["hops"] for r in rows}
+        == {1: 0, 2: 1, 3: 1, 4: 2},
+        id="bfs_hops"),
+    pytest.param(
+        lambda s: G.label_propagation(
+            _tri_tail(s), s.createDataFrame([(1, "x")], "node bigint, "
+                                            "label string"), "a", "b"),
+        lambda rows: {r["node"]: r["label"] for r in rows}
+        == {1: "x", 2: "x", 3: "x", 4: "x"},
+        id="label_propagation"),
+    pytest.param(
+        lambda s: G.kcore_peel(_tri_tail(s), "a", "b", k=2, rounds=3),
+        lambda rows: {r["node"] for r in rows} == {1, 2, 3},
+        id="kcore_peel"),
+    pytest.param(
+        lambda s: G.kcore_peel_weighted(
+            _node_weights(s),
+            s.createDataFrame([(1, 2), (2, 3), (1, 3)], "u bigint, v bigint"),
+            k=2, rounds=2),
+        lambda rows: {tuple(r) for r in rows}
+        == {(1, 2, 3), (2, 1, 3), (3, 1, 3)},
+        id="kcore_peel_weighted"),
+    pytest.param(
+        lambda s: G.pagerank(_tri_tail(s), "a", "b", seeds=[99]),
+        (ValueError, "do not appear"), id="pagerank_absent_seed"),
+    pytest.param(
+        lambda s: G.pagerank(_tri_tail(s), "a", "b", seeds=[]),
+        (ValueError, "empty seeds"), id="pagerank_empty_seeds"),
+    pytest.param(
+        lambda s: G.pagerank(_tri_tail(s).withColumn("w", F.lit(10 ** 8)),
+                             "a", "b", weight_col="w"),
+        (ValueError, "exceeds"), id="pagerank_weight_overflow"),
+    pytest.param(
+        lambda s: G.connected_components(_failing_edges(s), "a", "b"),
+        (Exception, "bad edge row"), id="cc_failed_job"),
+    pytest.param(
+        lambda s: G.connected_components(_chain12(s), "a", "b",
+                                         max_iter=2, contract=False),
+        (RuntimeError, "did not converge"), id="cc_not_converged"),
+    pytest.param(
+        lambda s: G.bfs_hops(_tri_tail(s), ["x"], "a", "b"),
+        (ValueError, "not representable"), id="bfs_unrepresentable_seed"),
+    pytest.param(
+        lambda s: G.kcore_peel_weighted(_node_weights(s), _tri_tail(s),
+                                        k=2, rounds=2),
+        (ValueError, r"edges must have columns \(u, v\)"),
+        id="kcore_weighted_bad_columns"),
+]
+
+
+@pytest.mark.parametrize("run, expect", _LIFECYCLE_CASES)
+def test_iterative_operator_releases_cache(spark, run, expect):
+    """Every iterative operator releases every relation it cached, whether
+    it returns or raises, and a returned frame stays collectable after
+    the caches are gone."""
     cm = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     assert cm.isEmpty()
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4)], "a bigint, b bigint")
-    out = kcore_peel(edges, "a", "b", k=2, rounds=3)
-    assert cm.isEmpty()
-    assert {r["node"] for r in out.collect()} == {1, 2, 3}
-
-    w = spark.createDataFrame([(1, 2), (2, 1), (3, 1)], "node bigint, m bigint")
-    we = spark.createDataFrame([(1, 2), (2, 3), (1, 3)], "u bigint, v bigint")
-    out2 = kcore_peel_weighted(w, we, k=2, rounds=2)
-    assert cm.isEmpty()
-    assert out2.count() > 0
+    if isinstance(expect, tuple):
+        exc, match = expect
+        with pytest.raises(exc, match=match):
+            run(spark)
+        assert cm.isEmpty()
+    else:
+        out = run(spark)
+        assert cm.isEmpty()
+        assert expect(out.collect())
